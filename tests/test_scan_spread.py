@@ -9,7 +9,7 @@ import pytest
 
 from tests.conftest import SF_DIR
 from wrf_to_geodataframe_spark.session import (
-    _byte_string_as_bytes,
+    _max_partition_bytes,
     ensure_scan_parallelism,
     load_table,
     sf_path,
@@ -71,18 +71,29 @@ def test_failed_stat_not_memoized():
     assert dict(S._SCAN_BYTES_CACHE) == before
 
 
-def test_byte_string_parse():
-    """Size-suffixed conf values parse per Spark's byteStringAsBytes
-    semantics — a digit-stripping parse would read '128m' as 128 BYTES
-    and inflate the partition estimate ~1e6x (ADVICE r17)."""
-    d = 128 * 1024 * 1024
-    assert _byte_string_as_bytes("134217728", d) == 134217728
-    assert _byte_string_as_bytes("128m", d) == 128 * 1024 * 1024
-    assert _byte_string_as_bytes("128MB", d) == 128 * 1024 * 1024
-    assert _byte_string_as_bytes("1g", d) == 1024**3
-    assert _byte_string_as_bytes("512k", d) == 512 * 1024
-    assert _byte_string_as_bytes("64b", d) == 64
-    assert _byte_string_as_bytes("not-a-size", d) == d
+def test_max_partition_bytes_conf_round_trip(spark):
+    """The split size is read back through the JVM's own parser, so
+    every size suffix Spark accepts means what it means to Spark — a
+    digit-stripping parse would read '128m' as 128 BYTES and inflate
+    the partition estimate ~1e6x (ADVICE r17)."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    try:
+        for raw, want in (("1p", 1024**5), ("128m", 128 * 1024**2), ("64b", 64)):
+            spark.conf.set(key, raw)
+            assert _max_partition_bytes(spark) == want, raw
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def test_max_partition_bytes_falls_back_to_128m():
+    """A session whose conf the JVM cannot read gives the 128 MB default."""
+    from types import SimpleNamespace
+
+    assert _max_partition_bytes(SimpleNamespace(_jsparkSession=None)) == 128 * 1024**2
 
 
 def test_estimate_is_driver_side(spark):

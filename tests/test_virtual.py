@@ -17,6 +17,7 @@ import pytest
 from wrf_to_geodataframe_spark.sources.hdf5_write import write_netcdf4
 from wrf_to_geodataframe_spark.sources.netcdf import write_netcdf
 from wrf_to_geodataframe_spark.sources.virtual import (
+    _time_offsets,
     build_virtual_manifest,
     read_virtual,
 )
@@ -1060,3 +1061,17 @@ def test_read_virtual_over_s3_issues_pruned_ranged_gets(
     finally:
         sc.setLocalProperty(fsio.S3_ENDPOINT_PROP, None)
         srv.shutdown()
+
+
+def test_time_offsets_sort_with_none_var():
+    """A None var sorts first, as its own group, instead of raising
+    TypeError against the string vars."""
+    triples = [("t2", 1, 5), (None, 1, 2), ("t2", 0, 3), (None, 0, 4)]
+    assert _time_offsets(triples, 10) == [
+        (None, 0, 10), (None, 1, 14), ("t2", 0, 10), ("t2", 1, 13),
+    ]
+
+
+def test_time_offsets_null_nt_names_var_and_file():
+    with pytest.raises(ValueError, match=r"'t2'.*file_no 7"):
+        _time_offsets([("t2", 3, 4), ("t2", 7, None)], 0)

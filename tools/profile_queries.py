@@ -133,10 +133,7 @@ def main() -> None:
             out[name] = {"sec": -1.0, "err": str(ex)[:200]}
             spark.catalog.clearCache()
             continue
-        try:
-            sc.clearJobGroup()  # the typed reset API (ADVICE r17)
-        except Exception:
-            sc.setJobGroup("", "")
+        sc.setLocalProperty("spark.jobGroup.id", None)
         spark.catalog.clearCache()
 
         jobs = [j for j in _rest(f"{base}/jobs")

@@ -621,6 +621,29 @@ def update_virtual_manifest(
     return len(new)
 
 
+def _time_offsets(triples, base_t: int) -> list[tuple]:
+    """``(var, file_no, t_off)`` per ``(var, file_no, nt)`` triple: the
+    file's first time step in the var's virtual time axis, i.e.
+    ``base_t`` plus the ``nt`` of the var's earlier files (by file_no).
+    A None var sorts first, as its own group; a null ``nt`` raises a
+    ValueError naming the var and file_no."""
+    for v, fno, nt in triples:
+        if nt is None:
+            raise ValueError(
+                f"virtual index: null time length (nt) for var {v!r} "
+                f"in file_no {fno}"
+            )
+    off_rows, acc, cur_var = [], 0, None
+    for v, fno, nt in sorted(
+        triples, key=lambda t: (t[0] is not None, t[0] or "", t[1], t[2])
+    ):
+        if v != cur_var:
+            cur_var, acc = v, 0
+        off_rows.append((v, fno, acc + base_t))
+        acc += nt
+    return off_rows
+
+
 def _index_files(
     spark, files, var, lat_var, lon_var, out_path, base_t, write_mode,
     time_var=None,
@@ -703,18 +726,15 @@ def _index_files(
         # this builder is already an eager indexing call, so the
         # collect does not change the laziness contract.  Same cumsum
         # semantics: files ordered by file_no within each var.
-        triples = sorted(
-            (r["var"], r["file_no"], r["nt"])
-            for r in chunks.select("var", "file_no", "nt")
-            .distinct()
-            .collect()
+        off_rows = _time_offsets(
+            [
+                (r["var"], r["file_no"], r["nt"])
+                for r in chunks.select("var", "file_no", "nt")
+                .distinct()
+                .collect()
+            ],
+            base_t,
         )
-        off_rows, acc, cur_var = [], 0, None
-        for v, fno, nt in triples:
-            if v != cur_var:
-                cur_var, acc = v, 0
-            off_rows.append((v, fno, acc + base_t))
-            acc += nt
         offsets = spark.createDataFrame(
             sc.parallelize(off_rows, 1),
             "var string, file_no long, t_off long",

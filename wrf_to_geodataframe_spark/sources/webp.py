@@ -90,19 +90,6 @@ class _BitReader:
         self.bit = end_bit & 7
         return v
 
-    def peek_bits(self, n: int) -> int:
-        """Up to ``n`` LSB-first bits WITHOUT advancing; bits past the
-        end of the buffer read as 0 (callers re-validate symbol length
-        against the real remaining bit count)."""
-        nbytes = (self.bit + n + 7) >> 3
-        chunk = self.buf[self.byte : self.byte + nbytes]
-        return (int.from_bytes(chunk, "little") >> self.bit) & ((1 << n) - 1)
-
-    def skip_bits(self, n: int) -> None:
-        end_bit = self.bit + n
-        self.byte += end_bit >> 3
-        self.bit = end_bit & 7
-
 
 class _BitWriter:
     def __init__(self):
